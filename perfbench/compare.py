@@ -6,8 +6,9 @@ A and B are each a record file written by run.py (perfbench/results/*.json)
 or a directory of them.  For every workload present on both sides it prints
 each metric's median and quartiles on A and on B (across runs; within one
 run, across that run's passes, queries or races where the record has them)
-and the change of the median.  Traced records add the per-layer deltas,
-and every record adds per-query latency deltas.
+and the change of the median, then the same for the unbounded set-up
+figures ``process_to_session_s`` and ``cold_pass_s``.  Traced records add
+the per-layer deltas, and every record adds per-query latency deltas.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ from collections import defaultdict
 
 # per-run samples behind some figures: within-run quartiles of one run
 _SAMPLES = {"wall_s": "pass_wall_s", "cancel.latency_ms": "cancel_ms"}
+# unbounded set-up figures of every record: JVM start and the cold pass
+_RUN_FIGURES = {"process_to_session_s": "s", "cold_pass_s": "s"}
 
 
 def load(path: str) -> dict[str, list[dict]]:
@@ -80,11 +83,19 @@ def compare(a: dict[str, list[dict]], b: dict[str, list[dict]]) -> list[str]:
     for workload in sorted(set(a) & set(b)):
         ra, rb = a[workload], b[workload]
         lines.append(f"== {workload}  (A: {len(ra)} run(s), B: {len(rb)} run(s))")
-        for name, metric in ra[0]["metrics"].items():
-            if name not in rb[0]["metrics"]:
+        rows = [
+            (name, metric["unit"], metric_values(ra, name), metric_values(rb, name))
+            for name, metric in ra[0]["metrics"].items()
+            if name in rb[0]["metrics"]
+        ] + [
+            (name, unit, [r[name] for r in ra if name in r],
+             [r[name] for r in rb if name in r])
+            for name, unit in _RUN_FIGURES.items()
+        ]
+        for name, unit, va, vb in rows:
+            if not va or not vb:
                 continue
-            unit = metric["unit"]
-            qa, qb = quartiles(metric_values(ra, name)), quartiles(metric_values(rb, name))
+            qa, qb = quartiles(va), quartiles(vb)
             lines.append(
                 f"  {name:28s} A {qa[1]:.6g} [{qa[0]:.6g}, {qa[2]:.6g}]  "
                 f"B {qb[1]:.6g} [{qb[0]:.6g}, {qb[2]:.6g}] {unit}  "

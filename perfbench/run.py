@@ -7,13 +7,15 @@ Run from the root of a checkout.  One run:
 1. generates the corpus from ``--seed`` (perfbench/gen.py) under
    ``perfbench/.work/`` and points every Spark, JVM and Python scratch
    directory there;
-2. starts the driver session on ``local[N]``, N = min(4, nproc), imports the
-   registry and checks that every workload name resolves in it;
+2. imports the program, launches the driver JVM with a session on
+   ``local[N]``, N = min(4, nproc), imports the registry and checks that
+   every workload name resolves in it;
 3. compares each workload query once with its DuckDB twin from
-   ``oracle_sql()``, with the comparison of tools/check_oracles.py (this is
-   also the JVM's cold pass);
-4. sets up ``SETUPS`` fresh sessions, each timed to its first result, and
-   runs ``WARMUP_PASSES`` untimed passes on the last;
+   ``oracle_sql()``, with the comparison of tools/check_oracles.py; its
+   Spark side is the fresh JVM's cold pass.  setup_s = the program's import
+   + the session start + the registry import + the cold pass.  Then reads
+   the driver JVM's memory, after this fixed amount of work;
+4. runs the workload's untimed warm-up passes;
 5. runs whole passes over the workload's queries (plan build + noop-sink
    execution), in an order shuffled by the seed, until ``--seconds`` have
    passed and there are at least ``MIN_PASSES`` passes.
@@ -54,18 +56,15 @@ import gen  # noqa: E402
 import spans as tracing  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
 
-SETUPS = 3
-WARMUP_PASSES = 2
 MIN_PASSES = 3
 CANCEL_ROWS = 500_000
 CANCEL_WAITS_MS = tuple(range(10, 61))
-DRIVER_MEM = "2g"
 
 END_TO_END = {
     "setup_s": "s",
     "wall_s": "s",
     "query_geomean_ms": "ms",
-    "jvm_peak_rss_mb": "MB",
+    "jvm_retained_mb": "MB",
 }
 
 PER_LAYER = {
@@ -101,6 +100,7 @@ PER_LAYER = {
     "cancel.requests_per_race": "count",
     "cancel.interrupted_ratio": "ratio",
     "trace.overhead_pct": "%",
+    "jvm_peak_rss_mb": "MB",
 }
 
 # per-query layer figures, summed over a traced pass
@@ -128,21 +128,6 @@ def nproc() -> int:
     return len(os.sched_getaffinity(0))
 
 
-def calibrate() -> float:
-    """Seconds of a fixed pure-Python loop, the fastest of five equal
-    chunks: the shared host's speed at this moment, recorded beside the
-    timings so a reader can tell a slow host from a slow program.  It runs
-    no code of the program under test."""
-    best = float("inf")
-    for _ in range(5):
-        t = time.perf_counter()
-        acc = 0
-        for i in range(400_000):
-            acc += i * i % 7
-        best = min(best, time.perf_counter() - t)
-    return best
-
-
 def host_cpu() -> tuple[int, int]:
     """(steal, total) jiffies of the CPU line of /proc/stat."""
     with open("/proc/stat") as f:
@@ -159,12 +144,13 @@ def prepare_environment(work: str, cpus: int) -> None:
     tempfile.tempdir = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
+    # the program's own driver memory, so VmHWM follows what it touches
+    os.environ.pop("SPARK_GRAFT_DRIVER_MEM", None)
     # every JVM, spark-submit's launcher too, would keep a perf-data file
     # under /tmp
     os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
-        f"--driver-java-options \"-Xms{DRIVER_MEM} -Djava.io.tmpdir={tmp}\"",
+        f"--driver-java-options -Djava.io.tmpdir={tmp}",
         f"--conf spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
         "--conf spark.ui.showConsoleProgress=false",
         "pyspark-shell",
@@ -234,23 +220,16 @@ class Bench:
         )
         self.record["data_s"] = time.perf_counter() - t
 
+        t = time.perf_counter()
         from datafusion_test_spark import io as dfts_io
+        from datafusion_test_spark import session  # noqa: F401
 
+        self.record["import_s"] = time.perf_counter() - t
         if self.trace:
             # before registry import: operators bind `from ..io import table`
             self.tracer.wrap_io_table(dfts_io)
-        from pyspark import SparkContext
 
-        from datafusion_test_spark.session import get_session
-
-        t = time.perf_counter()
-        self.spark = get_session("perfbench")
-        self.record["first_session_s"] = time.perf_counter() - t
-        self.record["process_to_session_s"] = time.perf_counter() - _T_PROCESS
-        if self.trace:
-            self.tracer.wrap_gateway(self.spark.sparkContext)
-            self.tracer.wrap_cancel(SparkContext)
-
+    def import_registry(self) -> None:
         from datafusion_test_spark import registry
 
         t = time.perf_counter()
@@ -297,11 +276,15 @@ class Bench:
             path = os.path.join(self.data, f"{t}.parquet")
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
         t0 = time.perf_counter()
+        spark_s = 0.0
         for name in self.spec.queries:
             def compare(name=name):
+                nonlocal spark_s
+                t = time.perf_counter()
                 spark_side = check_oracles.rows_of_spark(
                     self.queries[name](self.spark, self.data)
                 )
+                spark_s += time.perf_counter() - t
                 duck_side = check_oracles.rows_of_duck(con, self.oracles[name])
                 return same_result(check_oracles, spark_side, duck_side)
 
@@ -310,33 +293,29 @@ class Bench:
                 self.fail("oracle", name, "result differs from its DuckDB twin")
         con.close()
         self.record["oracle_s"] = time.perf_counter() - t0
+        # the Spark side of the oracle check: the fresh JVM's cold pass
+        self.record["cold_pass_s"] = spark_s
 
-    def setups(self) -> None:
-        """``SETUPS`` fresh sessions, each timed to its first result (the
-        first query of the workload's list).  setup_s = registry import +
-        the median of these set-ups."""
+    def start_session(self) -> None:
         from datafusion_test_spark.session import get_session
 
-        first = self.spec.queries[0]
-        starts, totals = [], []
-        for _ in range(SETUPS):
-            self.spark.stop()
-            t = time.perf_counter()
-            self.spark = get_session("perfbench")
-            starts.append(time.perf_counter() - t)
-            self.attempt("setup", first, lambda: materialize(
-                self.queries[first](self.spark, self.data)))
-            totals.append(time.perf_counter() - t)
-        self.record["session_start_s"] = starts
-        self.record["setup_first_result_s"] = totals
-        self.record["setup_s"] = (
-            self.record["registry_import_s"] + statistics.median(totals)
-        )
-        for _ in range(WARMUP_PASSES):
+        t = time.perf_counter()
+        self.spark = get_session("perfbench")
+        self.record["session_start_s"] = time.perf_counter() - t
+        self.record["process_to_session_s"] = (
+            time.perf_counter() - _T_PROCESS - self.record["data_s"])
+
+    def setup_s(self) -> float:
+        """Process start to a warm session: the program's import, the driver
+        JVM launch, the registry import and the cold pass."""
+        r = self.record
+        return (r["import_s"] + r["session_start_s"] + r["registry_import_s"]
+                + r["cold_pass_s"])
+
+    def warm_up(self) -> None:
+        for _ in range(self.spec.warmup_passes):
             for name in self.spec.queries:
                 self.attempt("warmup", name, lambda name=name: self.run_query(name))
-        if self.trace:
-            self.probe = tracing.JvmProbe(self.spark)
 
     # ---- timed passes -----------------------------------------------------
 
@@ -350,6 +329,8 @@ class Bench:
         """One query inside spans; returns its layer figures."""
         sc = self.spark.sparkContext
         tr = self.tracer
+        # credit this query with no execution of the untraced work before it
+        self.probe.skip_seen()
         with tr.span("query", query=name):
             sc.setJobGroup(f"{tag}-build", name)
             with tr.span("build") as b:
@@ -363,8 +344,16 @@ class Bench:
                 x["wall0"] = time.time() * 1000
                 materialize(df)
                 x["wall1"] = time.time() * 1000
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        self.probe.settle()
         bj = self.probe.jobs(f"{tag}-build")
         xj = self.probe.jobs(f"{tag}-exec")
+        sql, executions = self.probe.sql_metrics()
+        self.credits.append({"tag": tag, "query": name,
+                             "build_jobs": bj["job_ids"],
+                             "exec_jobs": xj["job_ids"],
+                             "executions": executions})
         io_spans = [s for s in tr.spans if s["name"] == "io.table"
                     and s["parent"] == b["id"]]
         io_s = sum(s["t1"] - s["t0"] for s in io_spans)
@@ -389,7 +378,7 @@ class Bench:
                 xj["intervals"], x["wall0"], x["wall1"]),
             **{k: v for k, v in c.items() if k.startswith("catalyst.")},
         }
-        for key, value in self.probe.sql_metrics().items():
+        for key, value in sql.items():
             layer[key] = layer.get(key, 0.0) + value
         return layer
 
@@ -402,6 +391,7 @@ class Bench:
         samples: list[float] = []
         per_query: dict[str, list] = {n: [] for n in names}
         self.pass_layers: list[dict] = []
+        self.credits: list[dict] = []
         deadline = time.perf_counter() + self.seconds
 
         def enough() -> bool:
@@ -412,7 +402,6 @@ class Bench:
             )
 
         steal0, total0 = host_cpu()
-        calib = [calibrate()]
         i = 0
         while not enough():
             traced = self.trace and i % 2 == 1
@@ -437,7 +426,6 @@ class Bench:
                         samples.append(ms)
                         per_query[name].append({"latency_ms": ms})
             walls[traced].append(time.perf_counter() - t)
-            calib.append(calibrate())
             self.tracer.enabled = False
             if traced:
                 self.pass_layers.append(totals)
@@ -449,13 +437,15 @@ class Bench:
                      for n in names]
         self.record["query_geomean_ms"] = statistics.geometric_mean(
             statistics.median(lat) for lat in latencies if lat)
-        self.record["host_steal_pct"] = 100.0 * (steal1 - steal0) / (total1 - total0)
+        # passes shorter than a clock tick read no jiffies at all
+        self.record["host_steal_pct"] = (
+            100.0 * (steal1 - steal0) / max(total1 - total0, 1))
         self.record["pass_wall_s"] = walls[False]
-        self.record["calib_s"] = calib
         self.record["samples"] = len(samples)
         self.record["per_query"] = per_query
         if self.trace:
             self.record["traced_pass_wall_s"] = walls[True]
+            self.record["sql_credit"] = self.credits
             self.record["trace_overhead_pct"] = 100.0 * (
                 statistics.median(walls[True]) / statistics.median(walls[False])
                 - 1.0
@@ -521,7 +511,19 @@ class Bench:
                     return int(line.split()[1]) / 1024.0
         raise RuntimeError("VmHWM not found for the driver JVM")
 
-
+    def jvm_retained_mb(self) -> float:
+        """Heap left after a full collection plus non-heap in use (metaspace,
+        code cache): the memory the program holds, whatever size G1 has
+        grown the heap to.  Two collections apart: after the first, Spark's
+        ContextCleaner drops the blocks of broadcasts no longer reachable."""
+        jvm = self.spark.sparkContext._jvm
+        memory = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        for _ in range(2):
+            memory.gc()
+            time.sleep(0.3)
+        used = (memory.getHeapMemoryUsage().getUsed()
+                + memory.getNonHeapMemoryUsage().getUsed())
+        return used / 2**20
 
     def per_layer(self) -> dict:
         out = {k: statistics.median(p.get(k, 0.0) for p in self.pass_layers)
@@ -530,21 +532,34 @@ class Bench:
         memo_hits = sum(p.get("io.memo_hits", 0) for p in self.pass_layers)
         out.update(self.cancel)
         out.update({
-            "session.start_s": statistics.median(self.record["session_start_s"]),
+            "session.start_s": self.record["session_start_s"],
             "registry.import_s": self.record["registry_import_s"],
             "io.table_memo_hit_ratio": memo_hits / memo_calls if memo_calls else 0.0,
             "trace.overhead_pct": self.record["trace_overhead_pct"],
+            "jvm_peak_rss_mb": self.record["jvm_peak_rss_mb"],
         })
         return out
 
     def run(self) -> dict:
+        from pyspark import SparkContext
+
         self.start()
+        self.start_session()
+        self.import_registry()
+        if self.trace:
+            self.tracer.wrap_gateway(self.spark.sparkContext)
+            self.tracer.wrap_cancel(SparkContext)
         self.oracle_check()
-        self.setups()
+        self.record["setup_s"] = self.setup_s()
+        self.record["jvm_peak_rss_mb"] = self.jvm_peak_rss_mb()
+        self.record["jvm_retained_mb"] = self.jvm_retained_mb()
+        self.warm_up()
+        if self.trace:
+            self.probe = tracing.JvmProbe(self.spark)
         self.passes()
         if self.trace:
             self.cancel_sweep()
-        self.record["jvm_peak_rss_mb"] = self.jvm_peak_rss_mb()
+        self.record["jvm_peak_rss_end_mb"] = self.jvm_peak_rss_mb()
         units = PER_LAYER if self.trace else END_TO_END
         values = self.per_layer() if self.trace else self.record
         self.record["metrics"] = {
@@ -618,8 +633,7 @@ def main(argv=None) -> int:
           + (" LOAD1_HIGH" if m["load1_high"] else ""))
     print(f"error_rate {record['error_rate']} ratio "
           f"({record['failed']}/{record['attempted']})")
-    print(f"host: calibration {statistics.median(record['calib_s'])} s, "
-          f"steal {record['host_steal_pct']:.1f}% over the timed passes")
+    print(f"host: steal {record['host_steal_pct']:.1f}% over the timed passes")
     for name, metric in record["metrics"].items():
         print(f"{name} {metric['value']} {metric['unit']}")
     print(json.dumps({

@@ -163,22 +163,39 @@ class JvmProbe:
         self.sc = spark.sparkContext
         self.jvm = self.sc._jvm
         self.core = self.sc._jsc.sc().statusStore()
+        self.listener_bus = self.sc._jsc.sc().listenerBus()
         self.sql = spark._jsparkSession.sharedState().statusStore()
-        self.next_execution = self._first_unseen_execution()
         self._no_quantiles = self.sc._gateway.new_array(self.jvm.double, 0)
+        self.skip_seen()
+
+    def settle(self) -> None:
+        """Wait until the listener bus has delivered every posted event, so
+        that both status stores hold every job and execution so far (they
+        are filled asynchronously)."""
+        self.listener_bus.waitUntilEmpty()
+
+    def skip_seen(self) -> None:
+        """Let the next ``sql_metrics`` call start after every execution
+        seen so far."""
+        self.settle()
+        self.next_execution = self._first_unseen_execution()
 
     def _first_unseen_execution(self) -> int:
-        ids = [e.executionId() for e in _iter(self.sql.executionsList())]
-        return max(ids) + 1 if ids else 0
+        n = self.sql.executionsCount()
+        if n == 0:
+            return 0
+        last = self.sql.executionsList(n - 1, 1).head()
+        return last.executionId() + 1
 
     def jobs(self, group: str) -> dict:
-        """Jobs of one job group: count, stage/task figures and the union
-        of the jobs' running intervals (epoch ms)."""
+        """Jobs of one job group: ids, count, stage/task figures and the
+        union of the jobs' running intervals (epoch ms)."""
         out = {"jobs": 0, "stages": 0, "tasks": 0, "task_run_ms": 0.0,
-               "intervals": []}
+               "intervals": [], "job_ids": []}
         for jid in self.sc.statusTracker().getJobIdsForGroup(group):
             data = self.core.job(jid)
             out["jobs"] += 1
+            out["job_ids"].append(jid)
             sub, done = data.submissionTime(), data.completionTime()
             if sub.isDefined() and done.isDefined():
                 out["intervals"].append(
@@ -196,16 +213,19 @@ class JvmProbe:
                     out["task_run_ms"] += stage.executorRunTime()
         return out
 
-    def sql_metrics(self) -> dict:
+    def sql_metrics(self) -> tuple[dict, dict]:
         """Sum the SQL metrics of every execution started since the last
-        call, keyed by per-layer metric name."""
+        call (or ``skip_seen``), keyed by per-layer metric name.  Also
+        returns the job ids of each of those executions, by execution id.
+        Call ``settle`` first."""
         out: dict[str, float] = {}
-        while True:
-            opt = self.sql.execution(self.next_execution)
+        executions: dict[str, list] = {}
+        end = self._first_unseen_execution()
+        for eid in range(self.next_execution, end):
+            opt = self.sql.execution(eid)
             if not opt.isDefined():
-                break
-            eid = self.next_execution
-            self.next_execution += 1
+                continue
+            executions[str(eid)] = sorted(_iter(opt.get().jobs().keys()))
             values = self.sql.executionMetrics(eid)
             for node in _iter(self.sql.planGraph(eid).allNodes()):
                 node_name = node.name()
@@ -216,7 +236,8 @@ class JvmProbe:
                     text = values.get(metric.accumulatorId())
                     if text.isDefined():
                         out[key] = out.get(key, 0.0) + parse_metric(text.get())
-        return out
+        self.next_execution = end
+        return out, executions
 
     def phases(self, df) -> dict:
         """Catalyst analysis/optimization/planning ms of ``df``'s own

@@ -2,12 +2,13 @@
 
     python3 -m pytest perfbench/test_perfbench.py -q
 
-The first tests need no Spark.  The end-to-end tests start one driver JVM
-per workload and trace mode at ``--seconds 1`` (a few minutes in all).
+The first tests need no Spark.  The end-to-end tests make one run per
+workload and trace mode at ``--seconds 1`` (a few minutes in all).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import subprocess
@@ -105,7 +106,9 @@ def test_compare_prints_every_metric(tmp_path):
         assert name in out
 
 
+@functools.lru_cache(maxsize=None)
 def _run(workload: str, trace: int) -> tuple[dict, str]:
+    """One short run (seed 1); its summary line and its stdout."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", "1", "--seconds", "1", "--trace", str(trace)],
@@ -127,6 +130,29 @@ def test_every_metric_printed_with_its_unit(workload, trace):
         assert got["unit"] == m["unit"]
         assert f"{m['name']} {got['value']} {m['unit']}" in stdout
     assert set(result["metrics"]) == {m["name"] for m in expected}
+
+
+@pytest.mark.parametrize("workload", sorted(WORKLOADS))
+def test_traced_query_is_credited_only_its_own_executions(workload):
+    """Each traced query's SQL metrics (exec.scan_rows, exec.exchange_bytes,
+    sink.*, ...) come from executions whose jobs all ran in that query's
+    own job groups, and every job of its exec group is covered: the
+    untraced pass before it adds nothing.  Its scan rows are then the same
+    in every traced pass."""
+    _run(workload, 1)
+    with open(os.path.join(HERE, "results", f"{workload}-seed1-trace1.json")) as f:
+        record = json.load(f)
+    credits = record["sql_credit"]
+    assert credits
+    for c in credits:
+        own = set(c["build_jobs"]) | set(c["exec_jobs"])
+        credited = {j for jobs in c["executions"].values() for j in jobs}
+        assert credited <= own, c
+        assert set(c["exec_jobs"]) <= credited, c
+    for name, layers in record["per_query"].items():
+        scan_rows = {layer.get("exec.scan_rows", 0.0) for layer in layers
+                     if "exec.s" in layer}
+        assert len(scan_rows) == 1, (name, scan_rows)
 
 
 def test_refuses_to_run_without_the_program(tmp_path):

@@ -11,9 +11,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+
 @dataclass(frozen=True)
 class Workload:
     sf: float
+    # untimed passes after the cold pass: the driver JVM's JIT keeps
+    # speeding passes up for a dozen or more of them (about 13 s of warm-up
+    # on either workload)
+    warmup_passes: int
     queries: tuple[str, ...]
 
 
@@ -22,6 +27,7 @@ WORKLOADS = {
     # launch no job while building their plan at sf0.001 (probed at seed).
     "plan_overhead": Workload(
         sf=0.001,
+        warmup_passes=10,
         queries=(
             "agg_anova_eta",
             "dedup_url",
@@ -35,6 +41,7 @@ WORKLOADS = {
     # the dedup threshold sweep's pair self-join.
     "scan_shuffle": Workload(
         sf=0.02,
+        warmup_passes=5,
         queries=(
             "agg_groupby",
             "join_skew_salted",
