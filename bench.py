@@ -371,7 +371,8 @@ def summary_record(record: dict) -> dict:
     BENCH_r{11,12}.json with ``"parsed": null`` — and r13's summary-FIRST
     placement still did (the tail was the head-truncated record line).
     main() therefore prints THIS line (< 2 KB: headline and layout totals,
-    query counts, machine block, top-10 slowest) as the FINAL stdout line,
+    query counts, the warm-up failure count, machine block, top-10
+    slowest) as the FINAL stdout line,
     with the full per-query record before it.  Consumers wanting per-query
     times (``--pair``, round ledgers) locate the record line by CONTENT via
     :func:`_full_record_from_stdout`, never by position.
@@ -387,6 +388,7 @@ def summary_record(record: dict) -> dict:
         "layout_wall_sec": record["layout_wall_sec"],
         "n_layout": len(record["layout_queries"]),
         "sf": record["sf"],
+        "warmup_failures": len(record["warmup_failures"]),
         "machine": record["machine"],
         "top10_slowest": top10,
         "summary": True,
@@ -435,14 +437,17 @@ def main() -> None:
     # Warm-up: JVM, whole-stage-codegen compilation, parquet footer caches —
     # run every headline query once at the smallest SF so the measured runs
     # time execution, not JIT compilation.
+    # A failing warm-up query is recorded (name -> exception type) in the
+    # full record and counted in the summary, never dropped silently.
     qs = registry.queries()
     warm_dir = "/root/testdata/sf0.001"
+    warmup_failures: dict[str, str] = {}
     if os.path.isdir(warm_dir):
         for name in HEADLINE + LAYOUT:
             try:
                 materialize(qs[name](spark, warm_dir))
-            except Exception:
-                pass
+            except Exception as e:
+                warmup_failures[name] = type(e).__name__
     table(spark, sf_dir, "lineitem").count()
     times = _bench_group(spark, qs, HEADLINE, sf_dir)
     layout_times = _bench_group(spark, qs, LAYOUT, sf_dir)
@@ -456,6 +461,7 @@ def main() -> None:
         "layout_queries": layout_times,
         "layout_wall_sec": round(sum(layout_times.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "warmup_failures": warmup_failures,
         "machine": {
             "cpus": os.cpu_count(),
             "spark_cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),

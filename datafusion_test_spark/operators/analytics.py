@@ -633,6 +633,11 @@ def _basket_pairs(li: DataFrame):
     old distinct did); pairs = (a, b) with a < b from non-NULL orders
     only (the self-join's o = o condition never matched NULL keys, so the
     NULL group must not pair with itself here either).
+
+    NULL part keys (ADVICE r15): collect_set DROPS NULL ``p``, so a NULL
+    part never enters a basket or its pairs, and consumers exploding
+    ``ps`` never see one.  This differs from the old distinct-(o, p)
+    shape, which kept one (o, NULL) row per order holding a NULL part.
     """
     baskets = (
         li.select(

@@ -95,13 +95,16 @@ def tune(spark: SparkSession) -> SparkSession:
     a driver-provided session whose runtime confs are mutated by external
     code after the first tune() re-pins the FULL set the moment the
     sentinel drifts — ~0.3 ms/call instead of the ~5 ms full re-apply,
-    keeping the docstring's 'driver-provided or ours' contract honest."""
+    keeping the docstring's 'driver-provided or ours' contract honest.
+    A sentinel read that RAISES also falls through to the full re-pin
+    (ADVICE r15): returning early there would let one transient conf-API
+    error switch re-pinning off for good."""
     if spark in _TUNED:
         try:
             if spark.conf.get(_SENTINEL_CONF) == RUNTIME_CONFS[_SENTINEL_CONF]:
                 return spark
         except Exception:
-            return spark  # conf API unavailable; nothing to re-pin with
+            pass  # unreadable sentinel: re-pin below, each set guarded
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

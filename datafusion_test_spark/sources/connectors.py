@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from itertools import groupby
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -673,66 +675,179 @@ def scan_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_probe_file(spark: SparkSession, path: str, column: str,
-                      hits: list[str], misses: list[str]):
-    """Probe a parquet file's bloom filters via parquet-mr — the SAME
-    reader-side library Spark's scan uses for bloom row-group filtering
-    (org.apache.parquet.hadoop.ParquetFileReader), reached through the
-    session's JVM gateway.  Driver-side O(n_rowgroups) metadata work, the
-    scan_manifest_prune footer-read shape.
-
-    Returns (rg_total, rg_with_bloom, miss_cells, miss_excluded,
-    hit_flags) where a "cell" is one (probe value, bloomed row group)
-    pair: miss_excluded counts cells the bloom EXCLUDES (the row-group
-    skip a reader performs on a miss), and hit_flags is one bool PER HIT
-    KEY — True iff THIS file maybe-contains the key (some row-group
-    bloom finds it, or the file carries no bloom and so cannot exclude).
-    A present key lives in exactly ONE file of a multi-file layout, so
-    the no-false-negative contract is per-key ∨ ACROSS files — the
-    caller ORs flags file-by-file (ADVICE r10: counting found-per-file
-    made hit_ok false for any file count > 1, because the other files'
-    blooms correctly exclude a key they don't hold)."""
+def _column_chunks(spark: SparkSession, layout_dir: str, column: str):
+    """Walk a parquet layout's footers through parquet-mr — the SAME
+    reader-side library Spark's scan uses for bloom and page-index
+    skipping (org.apache.parquet.hadoop.ParquetFileReader), reached
+    through the session's JVM gateway.  Visits every ``.parquet`` file of
+    ``layout_dir`` in sorted order, one reader per file (closed in
+    ``finally``, also when the consumer stops early), and yields
+    ``(reader, block, chunk)`` for every row group, ``chunk`` being the
+    row group's ``column`` chunk found by dotted path.  The reader is
+    open while the consumer handles the triple, so it can read the
+    chunk's bloom filter or page index.  An empty corpus (a bare
+    _SUCCESS dir) or a schema-only file yields nothing.  Driver-side
+    O(n_rowgroups) metadata work, the scan_manifest_prune footer-read
+    shape."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_bloom = miss_cells = miss_excluded = 0
-    hit_flags: list[bool] = []
-    try:
-        blocks = reader.getRowGroups()
-        blooms = []
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() == column:
-                    bf = reader.getBloomFilterDataReader(block).readBloomFilter(cc)
-                    if bf is not None:
-                        rg_bloom += 1
-                        blooms.append(bf)
-                    break
-        Binary = jvm.org.apache.parquet.io.api.Binary
-        for v in misses:
-            for bf in blooms:
-                miss_cells += 1
-                if not bf.findHash(bf.hash(Binary.fromString(v))):
-                    miss_excluded += 1
-        for v in hits:
-            hit_flags.append(
-                not blooms
-                or any(
-                    bf.findHash(bf.hash(Binary.fromString(v)))
-                    for bf in blooms
+    for name in sorted(os.listdir(layout_dir)):
+        if not name.endswith(".parquet"):
+            continue
+        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(os.path.join(layout_dir, name)), conf
+        )
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+        try:
+            blocks = reader.getRowGroups()
+            for i in range(blocks.size()):
+                block = blocks.get(i)
+                cols = block.getColumns()
+                chunk = next(
+                    (
+                        cc
+                        for cc in (cols.get(j) for j in range(cols.size()))
+                        if cc.getPath().toDotString() == column
+                    ),
+                    None,
+                )
+                if chunk is None:
+                    raise ValueError(f"{name} has no column chunk {column!r}")
+                yield reader, block, chunk
+        finally:
+            reader.close()
+
+
+def _bloom_admits(spark: SparkSession, bf, value: str) -> bool:
+    """False only when the row group's bloom filter EXCLUDES ``value`` —
+    the row-group skip a reader performs on a miss.  Blooms have no false
+    negatives, and a row group without a bloom (``bf`` None) cannot
+    exclude anything."""
+    binary = spark._jvm.org.apache.parquet.io.api.Binary
+    return bf is None or bool(bf.findHash(bf.hash(binary.fromString(value))))
+
+
+_PAGE_ROW_LIMIT = 1000
+
+
+class _Page(NamedTuple):
+    """One data page of a ColumnIndex/OffsetIndex-indexed chunk."""
+
+    rows: int  # OffsetIndex first-row deltas (row-group rows close the last)
+    all_null: bool  # ColumnIndex null_pages flag: such pages store NO bounds
+    null_count: int | None  # None when the chunk's null-count list is absent
+    lo: int | bytes | None  # decoded stored min; None on an all-null page
+    hi: int | bytes | None  # decoded stored max; None on an all-null page
+
+
+class _Chunk(NamedTuple):
+    """One row group's chunk of the probed column."""
+
+    file: str
+    rows: int
+    indexed: bool  # carries BOTH a ColumnIndex and an OffsetIndex
+    order: str | None  # ColumnIndex boundary order; None when not indexed
+    pages: list[_Page]  # empty when not indexed
+
+
+def _page_index(spark: SparkSession, layout_dir: str, column: str, ptype: str):
+    """Yield a :class:`_Chunk` per row group of the layout: parquet-mr's
+    page-level ColumnIndex/OffsetIndex for ``column`` — the structures
+    Spark's vectorized reader consults for page skipping when a filter is
+    pushed (spark.sql.parquet.filterPushdown + parquet.filter.columnindex).
+    Per-page row counts come from the OffsetIndex, so flag/count/row-count
+    consistency is checked against parquet-mr's OWN metadata.
+
+    ``ptype`` names the decode, and the chunk's primitive type is asserted
+    before decoding (ADVICE r11 — a decode-kind/type mismatch must fail
+    loudly, never misread bounds):
+      * ``INT64`` — a little-endian getLong; INT64 min/max are exact,
+        never truncated, so containment is the reader's real decision;
+      * ``BINARY`` — the stored bytes, compared as UNSIGNED bytes
+        (parquet's UTF8 sort order; python bytes comparison is the same
+        order).  parquet-mr TRUNCATES these bounds (BinaryTruncator,
+        parquet.columnindex.truncate.length): min is cut to a prefix
+        (rounds DOWN), max is cut with its last byte incremented (rounds
+        UP), so the stored [min,max] only CONTAINS the true page range
+        and containment is ONE-SIDED — false positives are legal, false
+        negatives are not.  ADVICE r12: the max-side cut keeps the
+        ORIGINAL untruncated max when the kept prefix is all 0xFF bytes
+        (the increment would overflow), so bounds longer than the
+        truncation length are legal on arbitrary binary data.
+
+    Driver-side O(n_pages) metadata work."""
+    jvm = spark._jvm
+    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
+    binary = jvm.org.apache.parquet.io.api.Binary
+    decode = {
+        "INT64": lambda buf: buf.duplicate().order(little).getLong(0),
+        "BINARY": lambda buf: bytes(
+            binary.fromReusedByteBuffer(buf.duplicate()).getBytes()
+        ),
+    }[ptype]
+    for reader, block, chunk in _column_chunks(spark, layout_dir, column):
+        actual = str(chunk.getPrimitiveType().getPrimitiveTypeName())
+        if actual != ptype:
+            raise ValueError(
+                f"_page_index decodes {ptype} bounds only; column "
+                f"{column!r} is {actual}"
+            )
+        file, rows = str(reader.getFile()), int(block.getRowCount())
+        ci = reader.readColumnIndex(chunk)
+        oi = reader.readOffsetIndex(chunk)
+        if ci is None or oi is None:
+            yield _Chunk(file, rows, False, None, [])
+            continue
+        n_pages = oi.getPageCount()
+        starts = [int(oi.getFirstRowIndex(p)) for p in range(n_pages)] + [rows]
+        mins, maxs, nullp = (
+            ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
+        )
+        nc = ci.getNullCounts()
+        pages = []
+        for p in range(n_pages):
+            all_null = bool(nullp[p])
+            pages.append(
+                _Page(
+                    starts[p + 1] - starts[p],
+                    all_null,
+                    None if nc is None else int(nc[p]),
+                    None if all_null else decode(mins.get(p)),
+                    None if all_null else decode(maxs.get(p)),
                 )
             )
-    finally:
-        reader.close()
-    return rg_total, rg_bloom, miss_cells, miss_excluded, hit_flags
+        yield _Chunk(file, rows, True, str(ci.getBoundaryOrder()), pages)
+
+
+def _pages_admitting(pages, v) -> int:
+    """Pages whose stored [lo, hi] contains ``v`` — the page set a
+    page-index reader scans for ``= v``.  All-null pages store no bounds,
+    so no value predicate admits them; no probe value admits nothing."""
+    return 0 if v is None else sum(
+        not p.all_null and p.lo <= v <= p.hi for p in pages
+    )
+
+
+def _index_flags(index) -> dict:
+    """The chunk-level page-index contracts shared by the page tiers:
+    index_written — every chunk carries both indexes; page_granular —
+    every indexed chunk has at least ceil(rows / _PAGE_ROW_LIMIT) pages
+    (the writer's page-row cap makes that floor exact); ordered_ok — no
+    chunk's boundary order is UNORDERED (a sorted layout must read back
+    ordered)."""
+    return {
+        "index_written": all(c.indexed for c in index),
+        "page_granular": all(
+            len(c.pages) * _PAGE_ROW_LIMIT >= c.rows for c in index if c.indexed
+        ),
+        "ordered_ok": all(c.order != "UNORDERED" for c in index),
+    }
+
+
+def _flag_cols(**flags) -> list:
+    """The driver-verified contract flags as literal columns, in argument
+    order."""
+    return [F.lit(bool(v)).alias(k) for k, v in flags.items()]
 
 
 def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,22 +921,23 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hit_keys = [] if row["lo"] is None else [f"k{row['lo']}", f"k{row['hi']}"]
     miss_keys = [f"miss{i}" for i in range(16)]  # 'k<digits>' never matches
-    rg_total = rg_bloom = cells = excluded = 0
-    hit_found = [False] * len(hit_keys)
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, b, c, e, flags = _bloom_probe_file(
-            spark, os.path.join(out, f), "key", hit_keys, miss_keys
-        )
-        rg_total += t
-        rg_bloom += b
-        cells += c
-        excluded += e
-        hit_found = [got or new for got, new in zip(hit_found, flags)]
-    bloom_written = rg_bloom == rg_total
+    blooms = [
+        reader.getBloomFilterDataReader(block).readBloomFilter(chunk)
+        for reader, block, chunk in _column_chunks(spark, out, "key")
+    ]
+    bloomed = [bf for bf in blooms if bf is not None]
+    # a miss cell is one (absent key, bloomed row group) pair
+    excluded = sum(
+        not _bloom_admits(spark, bf, v) for v in miss_keys for bf in bloomed
+    )
+    cells = len(miss_keys) * len(bloomed)
+    bloom_written = len(bloomed) == len(blooms)
     miss_ok = cells == 0 or excluded * 10 >= cells * 9
-    hit_ok = all(hit_found)  # vacuous on an empty corpus (no hit keys)
+    # per-key OR across every row group of every file (ADVICE r10);
+    # vacuous on an empty corpus (no hit keys)
+    hit_ok = all(
+        any(_bloom_admits(spark, bf, v) for bf in blooms) for v in hit_keys
+    )
     # the point lookup: schema-stated read (empty corpus writes a bare
     # _SUCCESS dir), literal Eq predicate → PushedFilters on `key`
     rt = spark.read.schema("key string, o_orderkey bigint, o_totalprice double").parquet(out)
@@ -834,96 +950,13 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum(F.col("o_totalprice"), "hit_sum_price"),
             )
         )
-        .withColumn("bloom_written", F.lit(bool(bloom_written)))
-        .withColumn("miss_ok", F.lit(bool(miss_ok)))
-        .withColumn("hit_ok", F.lit(bool(hit_ok)))
+        .select(
+            "*",
+            *_flag_cols(
+                bloom_written=bloom_written, miss_ok=miss_ok, hit_ok=hit_ok
+            ),
+        )
     )
-
-
-_PAGE_ROW_LIMIT = 1000
-
-
-def _pageindex_probe_file(spark: SparkSession, path: str, column: str,
-                          point: int | None, below: int | None):
-    """Probe a parquet file's page-level ColumnIndex/OffsetIndex via
-    parquet-mr — the reader-side structures Spark's vectorized scan
-    consults for page skipping when a filter is pushed
-    (spark.sql.parquet.filterPushdown + parquet.filter.columnindex).
-    Driver-side O(n_pages) metadata work, the scan_manifest_prune /
-    _bloom_probe_file footer-read shape.
-
-    Returns (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-    point_pages, below_pages): rg_indexed counts row groups whose target
-    chunk carries BOTH a ColumnIndex and an OffsetIndex; granular_bad
-    counts chunks with fewer pages than ceil(rows / _PAGE_ROW_LIMIT)
-    (the writer's page-row cap makes that floor exact); unordered counts
-    chunks whose boundary order is UNORDERED (the sorted layout must
-    yield ASCENDING); point_pages / below_pages count non-null pages
-    whose [min,max] CONTAINS the probe value — the exact page set a
-    page-index reader scans (INT64 min/max are exact, never truncated,
-    so containment is the reader's real decision).
-
-    INT64-only by contract (ADVICE r11): the decode is a little-endian
-    getLong, which would silently misread any other primitive type, so
-    the target chunk's type is asserted before decoding.  The
-    variable-length BINARY tier (truncated bounds, one-sided
-    containment) is :func:`_pageindex_probe_file_str`."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = 0
-    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "INT64":
-                    raise ValueError(
-                        f"_pageindex_probe_file decodes INT64 bounds only; "
-                        f"column {column!r} is {ptype} (use the BINARY "
-                        f"variant _pageindex_probe_file_str)"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                rows = block.getRowCount()
-                if n_pages * _PAGE_ROW_LIMIT < rows:
-                    granular_bad += 1
-                if str(ci.getBoundaryOrder()) == "UNORDERED":
-                    unordered += 1
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                for p in range(n_pages):
-                    if nullp[p]:
-                        continue
-                    lo = mins.get(p).duplicate().order(little).getLong(0)
-                    hi = maxs.get(p).duplicate().order(little).getLong(0)
-                    if point is not None and lo <= point <= hi:
-                        point_pages += 1
-                    if below is not None and lo <= below <= hi:
-                        below_pages += 1
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-            point_pages, below_pages)
 
 
 def scan_parquet_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -998,32 +1031,16 @@ def scan_parquet_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row aggregate) and fold it into the vacuity condition instead of
     # leaving the unique-ish-key precondition implicit.
     m_min = 0 if lo is None else o.filter(F.col("o_orderkey") == lo).count()
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, idx, pg, gb, uo, pp, bp = _pageindex_probe_file(
-            spark, os.path.join(out, f), "o_orderkey", lo, below
-        )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        granular_bad += gb
-        unordered += uo
-        point_pages += pp
-        below_pages += bp
-    index_written = rg_indexed == rg_total
-    page_granular = granular_bad == 0
-    ordered_ok = unordered == 0
+    index = list(_page_index(spark, out, "o_orderkey", "INT64"))
+    pages = [p for c in index for p in c.pages]
+    point_pages = _pages_admitting(pages, lo)
     point_prune_ok = (
-        pages_total <= 1
-        or (point_pages >= 1 and point_pages * 2 <= pages_total)
+        len(pages) <= 1
+        or (point_pages >= 1 and point_pages * 2 <= len(pages))
         # vacuity: the min key owns ≥ half the rows, so admitting more
         # than half the pages is the CORRECT reader decision (ADVICE r11)
         or (point_pages >= 1 and 2 * m_min >= nn)
     )
-    below_min_excluded = below_pages == 0
     # the point lookup: schema-stated read (empty corpus writes a bare
     # _SUCCESS dir), literal Eq predicate → PushedFilters on o_orderkey
     rt = spark.read.schema("o_orderkey bigint, o_totalprice double").parquet(out)
@@ -1036,118 +1053,20 @@ def scan_parquet_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum(F.col("o_totalprice"), "hit_sum_price"),
             )
         )
-        .withColumn("index_written", F.lit(bool(index_written)))
-        .withColumn("page_granular", F.lit(bool(page_granular)))
-        .withColumn("ordered_ok", F.lit(bool(ordered_ok)))
-        .withColumn("point_prune_ok", F.lit(bool(point_prune_ok)))
-        .withColumn("below_min_excluded", F.lit(bool(below_min_excluded)))
+        .select(
+            "*",
+            *_flag_cols(
+                **_index_flags(index),
+                point_prune_ok=point_prune_ok,
+                below_min_excluded=_pages_admitting(pages, below) == 0,
+            ),
+        )
     )
 
 
 _PAGE_TRUNC_LEN = 16  # parquet.columnindex.truncate.length for the layout
 _KEY_PAD = 12  # zero-padded digits: lex order == numeric order, unique
 _KEY_SUFFIX = "x" * 20  # shared tail pushes every key PAST the truncation
-
-
-def _pageindex_probe_file_str(spark: SparkSession, path: str, column: str,
-                              point: bytes | None, fp: bytes | None,
-                              below: bytes | None):
-    """BINARY twin of :func:`_pageindex_probe_file` — probe a parquet
-    file's page-level ColumnIndex for a STRING column, where parquet-mr
-    TRUNCATES the stored page bounds (BinaryTruncator,
-    parquet.columnindex.truncate.length): min is cut to a prefix (rounds
-    DOWN) and max is cut with its last byte incremented (rounds UP), so
-    the stored [min,max] only CONTAINS the true page range.  Containment
-    against truncated bounds is therefore ONE-SIDED — false positives
-    are legal, false negatives are not — which is exactly the weaker
-    contract a reader on any URL/doc-id clustered lake table runs under.
-
-    Returns (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-    point_pages, fp_pages, below_pages, overlong_bounds): the first five
-    as in the INT64 probe; point/fp/below_pages count non-null pages
-    whose stored (truncated) bounds admit the probe bytes under UNSIGNED
-    lexicographic order (parquet's UTF8 sort order — python bytes
-    comparison is the same order); overlong_bounds counts stored bounds
-    LONGER than the configured truncation length (must be zero when
-    every value exceeds the limit: truncation observably fired).
-    ADVICE r12 caveat on that zero: BinaryTruncator's max-side cut keeps
-    the ORIGINAL untruncated max when the kept prefix is all 0xFF bytes
-    (incrementing the last kept byte would overflow), so overlong_bounds
-    == 0 is only guaranteed because this probe's callers derive keys
-    from ASCII digits + 'x' (every byte < 0x7f, always incrementable);
-    a caller probing arbitrary binary data must expect legal overlong
-    max bounds.  Driver-side O(n_pages) metadata work, the
-    _bloom_probe_file class.
-    Asserts the chunk's primitive type is BINARY (ADVICE r11 — the
-    decode-kind/type mismatch must fail loudly, not misread)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    binary = jvm.org.apache.parquet.io.api.Binary
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = fp_pages = below_pages = overlong_bounds = 0
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "BINARY":
-                    raise ValueError(
-                        f"_pageindex_probe_file_str decodes BINARY bounds "
-                        f"only; column {column!r} is {ptype} (use "
-                        f"_pageindex_probe_file for INT64)"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                rows = block.getRowCount()
-                if n_pages * _PAGE_ROW_LIMIT < rows:
-                    granular_bad += 1
-                if str(ci.getBoundaryOrder()) == "UNORDERED":
-                    unordered += 1
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                for p in range(n_pages):
-                    if nullp[p]:
-                        continue
-                    lo = bytes(
-                        binary.fromReusedByteBuffer(
-                            mins.get(p).duplicate()
-                        ).getBytes()
-                    )
-                    hi = bytes(
-                        binary.fromReusedByteBuffer(
-                            maxs.get(p).duplicate()
-                        ).getBytes()
-                    )
-                    if max(len(lo), len(hi)) > _PAGE_TRUNC_LEN:
-                        overlong_bounds += 1
-                    if point is not None and lo <= point <= hi:
-                        point_pages += 1
-                    if fp is not None and lo <= fp <= hi:
-                        fp_pages += 1
-                    if below is not None and lo <= below <= hi:
-                        below_pages += 1
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-            point_pages, fp_pages, below_pages, overlong_bounds)
 
 
 def _pageindex_string_key():
@@ -1250,35 +1169,22 @@ def scan_parquet_pageindex_string(spark: SparkSession, sf_dir: str) -> DataFrame
     point = None if lo is None else lo.encode("utf-8")
     fp = None if hi is None else hi.encode("utf-8") + b"z"
     below = None if lo is None else b""
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = fp_pages = below_pages = overlong = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, idx, pg, gb, uo, pp, fpp, bp, ob = _pageindex_probe_file_str(
-            spark, os.path.join(out, f), "key", point, fp, below
-        )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        granular_bad += gb
-        unordered += uo
-        point_pages += pp
-        fp_pages += fpp
-        below_pages += bp
-        overlong += ob
-    index_written = rg_indexed == rg_total
-    page_granular = granular_bad == 0
-    ordered_ok = unordered == 0
-    trunc_real = overlong == 0
-    point_contained = lo is None or point_pages >= 1
+    index = list(_page_index(spark, out, "key", "BINARY"))
+    pages = [p for c in index for p in c.pages]
+    point_pages = _pages_admitting(pages, point)
+    # a stored bound LONGER than the truncation length: zero when every
+    # value exceeds the limit (truncation observably fired) — guaranteed
+    # only because the keys are pure ASCII (ADVICE r12, see _page_index)
+    overlong = sum(
+        max(len(p.lo), len(p.hi)) > _PAGE_TRUNC_LEN
+        for p in pages
+        if not p.all_null
+    )
     point_prune_ok = (
-        pages_total <= 1
-        or (point_pages >= 1 and point_pages * 2 <= pages_total)
+        len(pages) <= 1
+        or (point_pages >= 1 and point_pages * 2 <= len(pages))
         or (point_pages >= 1 and 2 * m_min >= nn)
     )
-    fp_admitted = hi is None or fp_pages >= 1
-    below_min_excluded = below_pages == 0
     # the point lookup: schema-stated read (empty corpus writes a bare
     # _SUCCESS dir), literal string Eq predicate → PushedFilters on key
     rt = spark.read.schema("key string, o_totalprice double").parquet(out)
@@ -1291,133 +1197,18 @@ def scan_parquet_pageindex_string(spark: SparkSession, sf_dir: str) -> DataFrame
                 dsum(F.col("o_totalprice"), "hit_sum_price"),
             )
         )
-        .withColumn("index_written", F.lit(bool(index_written)))
-        .withColumn("page_granular", F.lit(bool(page_granular)))
-        .withColumn("ordered_ok", F.lit(bool(ordered_ok)))
-        .withColumn("trunc_real", F.lit(bool(trunc_real)))
-        .withColumn("point_contained", F.lit(bool(point_contained)))
-        .withColumn("point_prune_ok", F.lit(bool(point_prune_ok)))
-        .withColumn("fp_admitted", F.lit(bool(fp_admitted)))
-        .withColumn("below_min_excluded", F.lit(bool(below_min_excluded)))
+        .select(
+            "*",
+            *_flag_cols(
+                **_index_flags(index),
+                trunc_real=overlong == 0,
+                point_contained=lo is None or point_pages >= 1,
+                point_prune_ok=point_prune_ok,
+                fp_admitted=hi is None or _pages_admitting(pages, fp) >= 1,
+                below_min_excluded=_pages_admitting(pages, below) == 0,
+            ),
+        )
     )
-
-
-def _pageindex_probe_file_nulls(spark: SparkSession, path: str, column: str,
-                                point: int | None, below: int | None):
-    """Null-axis twin of :func:`_pageindex_probe_file` — probe a parquet
-    file's page-level ColumnIndex for an INT64 column INCLUDING the
-    null-page structures the value-bounds probes only step around:
-    ``getNullPages()`` (per-page all-null flags — such pages store NO
-    min/max) and ``getNullCounts()`` (exact per-page null counts).
-    Per-page row counts are derived from the OffsetIndex
-    (``getFirstRowIndex(p+1) - getFirstRowIndex(p)``, last page closed
-    by the row-group row count), so the flag/count/row-count consistency
-    is checked against parquet-mr's OWN metadata, not assumed.
-
-    Returns (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-    point_pages, below_pages, allnull_pages, sum_null_counts,
-    flag_mismatch, nonprefix_null_pages): the first five as in the INT64
-    probe; point/below_pages count NON-null pages whose exact [min,max]
-    admit the probe (all-null pages have no bounds and are skipped —
-    the skippability every value predicate relies on); allnull_pages
-    counts pages flagged all-null; sum_null_counts totals the per-page
-    null counts (cross-checked against the oracle's count(*) −
-    count(key)); flag_mismatch counts pages where the flag disagrees
-    with null_count == page_rows (or null_count is out of [0, rows], or
-    the null-count list is absent); nonprefix_null_pages counts pages
-    with nulls appearing AFTER a null-free page in file order — zero for
-    a NULLS-FIRST sorted layout, where null-bearing pages must form a
-    file prefix.  Driver-side O(n_pages) metadata work, the
-    _bloom_probe_file class.  INT64-only by contract (ADVICE r11)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = allnull_pages = 0
-    sum_null_counts = 0
-    flag_mismatch = nonprefix = 0
-    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
-    seen_nullfree_page = False  # file-order prefix check across row groups
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "INT64":
-                    raise ValueError(
-                        f"_pageindex_probe_file_nulls decodes INT64 bounds "
-                        f"only; column {column!r} is {ptype}"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                rows = block.getRowCount()
-                if n_pages * _PAGE_ROW_LIMIT < rows:
-                    granular_bad += 1
-                if str(ci.getBoundaryOrder()) == "UNORDERED":
-                    unordered += 1
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                nc = ci.getNullCounts()
-                # absent null-count list: count the chunk's pages ONCE as
-                # the defect and skip the per-page flag/count consistency
-                # checks (they would re-trigger on every all-null page via
-                # the substituted zeros, double-counting the same absence —
-                # ADVICE r13); the substituted zeros still feed
-                # sum_null_counts, so the cross-engine n_nulls VALUE check
-                # catches the absence independently
-                nc_absent = nc is None
-                if nc_absent:
-                    flag_mismatch += n_pages
-                    nc = [0] * n_pages
-                for p in range(n_pages):
-                    first = oi.getFirstRowIndex(p)
-                    last = (
-                        oi.getFirstRowIndex(p + 1) if p + 1 < n_pages
-                        else rows
-                    )
-                    page_rows = int(last) - int(first)
-                    nulls_p = int(nc[p])
-                    sum_null_counts += nulls_p
-                    all_null = bool(nullp[p])
-                    if not nc_absent and not (0 <= nulls_p <= page_rows):
-                        flag_mismatch += 1
-                    if not nc_absent and all_null != (nulls_p == page_rows):
-                        flag_mismatch += 1
-                    if nulls_p == 0:
-                        seen_nullfree_page = True
-                    elif seen_nullfree_page:
-                        nonprefix += 1
-                    if all_null:
-                        allnull_pages += 1
-                        continue  # no bounds: skippable by ANY value pred
-                    lo = mins.get(p).duplicate().order(little).getLong(0)
-                    hi = maxs.get(p).duplicate().order(little).getLong(0)
-                    if point is not None and lo <= point <= hi:
-                        point_pages += 1
-                    if below is not None and lo <= below <= hi:
-                        below_pages += 1
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-            point_pages, below_pages, allnull_pages, sum_null_counts,
-            flag_mismatch, nonprefix)
 
 
 def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1479,7 +1270,7 @@ def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_manifest_prune footer class).
 
     Reference anchor: the same pushed-lookup data plane as
-    scan_parquet_pageindex (sources/connectors.py:929); queued by
+    scan_parquet_pageindex; queued by
     VERDICT r12 item 2 / ROUND12.md handoff (recipe prototyped there).
     """
     out = os.path.join(scratch_dir("dfts_pageidx_n_"), "orders_pageindex_nulls")
@@ -1507,44 +1298,45 @@ def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, n_all, nn = row["lo"], row["n_all"], row["nn"]
     below = None if lo is None else lo - 1
     m_min = 0 if lo is None else o.filter(F.col("key") == lo).count()
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = allnull = 0
-    sum_nulls = 0
-    flag_mismatch = nonprefix = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        (t, idx, pg, gb, uo, pp, bp, an, sn, fm, npx) = (
-            _pageindex_probe_file_nulls(
-                spark, os.path.join(out, f), "key", lo, below
-            )
+    index = list(_page_index(spark, out, "key", "INT64"))
+    pages = [p for c in index for p in c.pages]
+    point_pages = _pages_admitting(pages, lo)
+    # an absent null-count list reads as zeros here, so the cross-engine
+    # n_nulls VALUE check catches the absence independently
+    n_nulls = sum(p.null_count or 0 for p in pages)
+    # the page flag holds exactly when null_count == page rows, and every
+    # null count sits in [0, page_rows].  An absent null-count list counts
+    # the chunk's pages ONCE as the defect, with no per-page checks on top
+    # (ADVICE r13: one absence must not be counted twice)
+    flag_mismatch = sum(
+        len(c.pages)
+        if any(p.null_count is None for p in c.pages)
+        else sum(
+            (not 0 <= p.null_count <= p.rows)
+            + (p.all_null != (p.null_count == p.rows))
+            for p in c.pages
         )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        granular_bad += gb
-        unordered += uo
-        point_pages += pp
-        below_pages += bp
-        allnull += an
-        sum_nulls += sn
-        flag_mismatch += fm
-        nonprefix += npx
-    index_written = rg_indexed == rg_total
-    page_granular = granular_bad == 0
-    ordered_ok = unordered == 0
-    nullflags_ok = flag_mismatch == 0
-    nulls_clustered_ok = nonprefix == 0
-    allnull_observed_ok = allnull >= 1 or (n_all - nn) < _PAGE_ROW_LIMIT
-    point_contained = lo is None or point_pages >= 1
+        for c in index
+    )
+    # NULLS-FIRST prefix, per file across its row groups: no null-bearing
+    # page may follow a null-free one
+    nonprefix = 0
+    for _, chunks in groupby(index, key=lambda c: c.file):
+        nulls = [p.null_count or 0 for c in chunks for p in c.pages]
+        first_free = next(
+            (i for i, n in enumerate(nulls) if n == 0), len(nulls)
+        )
+        nonprefix += sum(n > 0 for n in nulls[first_free:])
+    allnull_observed_ok = (
+        any(p.all_null for p in pages) or (n_all - nn) < _PAGE_ROW_LIMIT
+    )
     point_prune_ok = (
         lo is None  # all-null corpus: nothing to prune toward
-        or pages_total <= 1
-        or (point_pages >= 1 and point_pages * 2 <= pages_total)
+        or len(pages) <= 1
+        or (point_pages >= 1 and point_pages * 2 <= len(pages))
         # vacuity: the min key owns ≥ half the non-null rows (ADVICE r11)
         or (point_pages >= 1 and 2 * m_min >= nn)
     )
-    below_min_excluded = below_pages == 0
     # data plane: schema-stated read (empty corpus writes a bare _SUCCESS
     # dir); IS NULL and literal Eq both reach PushedFilters on key
     rt = spark.read.schema("key bigint, o_totalprice double").parquet(out)
@@ -1564,93 +1356,20 @@ def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum(F.col("o_totalprice"), "hit_sum_price"),
             )
         )
-        .withColumn("n_nulls", F.lit(int(sum_nulls)).cast("bigint"))
-        .withColumn("index_written", F.lit(bool(index_written)))
-        .withColumn("page_granular", F.lit(bool(page_granular)))
-        .withColumn("ordered_ok", F.lit(bool(ordered_ok)))
-        .withColumn("nullflags_ok", F.lit(bool(nullflags_ok)))
-        .withColumn("nulls_clustered_ok", F.lit(bool(nulls_clustered_ok)))
-        .withColumn("allnull_observed_ok", F.lit(bool(allnull_observed_ok)))
-        .withColumn("point_contained", F.lit(bool(point_contained)))
-        .withColumn("point_prune_ok", F.lit(bool(point_prune_ok)))
-        .withColumn("below_min_excluded", F.lit(bool(below_min_excluded)))
+        .select(
+            "*",
+            F.lit(n_nulls).cast("bigint").alias("n_nulls"),
+            *_flag_cols(
+                **_index_flags(index),
+                nullflags_ok=flag_mismatch == 0,
+                nulls_clustered_ok=nonprefix == 0,
+                allnull_observed_ok=allnull_observed_ok,
+                point_contained=lo is None or point_pages >= 1,
+                point_prune_ok=point_prune_ok,
+                below_min_excluded=_pages_admitting(pages, below) == 0,
+            ),
+        )
     )
-
-
-def _pageindex_admitted_rows(spark: SparkSession, path: str, column: str,
-                             k1: int | None, k2: int | None):
-    """Metadata side of the READER-skip proof: walk a file's page-level
-    ColumnIndex/OffsetIndex (parquet-mr's own readers, the
-    _pageindex_probe_file class) and return the exact row budget a
-    page-index-aware reader is ALLOWED to materialize for two pushed
-    predicates — ``key BETWEEN k1 AND k2`` (non-null pages whose exact
-    INT64 [min,max] intersects the range; all-null pages store no bounds
-    and are never admitted) and ``key IS NULL`` (pages whose null count
-    is nonzero; an absent null-count list conservatively admits every
-    page, keeping the <=-contract honest rather than vacuously tight).
-
-    Returns (rg_total, rg_indexed, pages_total, rows_total,
-    admitted_range_rows, admitted_null_rows).  Driver-side O(n_pages)
-    metadata work.  INT64-only by contract (ADVICE r11)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_indexed = pages_total = rows_total = 0
-    adm_range = adm_null = 0
-    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            rows = int(block.getRowCount())
-            rows_total += rows
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "INT64":
-                    raise ValueError(
-                        f"_pageindex_admitted_rows decodes INT64 bounds "
-                        f"only; column {column!r} is {ptype}"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                nc = ci.getNullCounts()
-                for p in range(n_pages):
-                    first = oi.getFirstRowIndex(p)
-                    last = (
-                        oi.getFirstRowIndex(p + 1) if p + 1 < n_pages
-                        else rows
-                    )
-                    page_rows = int(last) - int(first)
-                    if nc is None or int(nc[p]) > 0:
-                        adm_null += page_rows
-                    if bool(nullp[p]):
-                        continue  # no bounds: no value predicate admits it
-                    lo = mins.get(p).duplicate().order(little).getLong(0)
-                    hi = maxs.get(p).duplicate().order(little).getLong(0)
-                    if k1 is not None and lo <= k2 and k1 <= hi:
-                        adm_range += page_rows
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, rows_total, adm_range,
-            adm_null)
 
 
 def _scan_metric_rows(spark: SparkSession, path: str, schema: str,
@@ -1776,20 +1495,24 @@ def scan_parquet_pageindex_reader(spark: SparkSession, sf_dir: str) -> DataFrame
         span = hi - lo
         k1 = lo + span // 2
         k2 = k1 + max(span // 100, 1)
-    rg_total = rg_indexed = pages_total = rows_meta = 0
-    adm_range = adm_null = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, idx, pg, rw, ar, an = _pageindex_admitted_rows(
-            spark, os.path.join(out, f), "key", k1, k2
-        )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        rows_meta += rw
-        adm_range += ar
-        adm_null += an
+    # metadata side: the exact row budget a page-index-aware reader is
+    # ALLOWED to materialize for each pushed predicate
+    index = list(_page_index(spark, out, "key", "INT64"))
+    pages = [p for c in index for p in c.pages]
+    rows_meta = sum(c.rows for c in index)
+    # IS NULL: pages with a nonzero null count; an absent null-count list
+    # conservatively admits every page, keeping the <=-contract honest
+    # rather than vacuously tight
+    adm_null = sum(
+        p.rows for p in pages if p.null_count is None or p.null_count > 0
+    )
+    # BETWEEN k1 AND k2: non-null pages whose exact [lo, hi] intersects
+    # the range (all-null pages store no bounds and are never admitted)
+    adm_range = 0 if k1 is None else sum(
+        p.rows
+        for p in pages
+        if not p.all_null and p.lo <= k2 and k1 <= p.hi
+    )
     schema = "key bigint, o_totalprice double"
     null_pred = F.col("key").isNull()
     # a NULL literal bound keeps the empty/all-null branch uniform: the
@@ -1814,25 +1537,7 @@ def scan_parquet_pageindex_reader(spark: SparkSession, sf_dir: str) -> DataFrame
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     n_nulls = n_all - nn
-    single_rowgroup_ok = rg_total <= 1
-    index_written = rg_indexed == rg_total
-    no_index = rg_indexed < rg_total  # no index, no skip claim (vacuity)
-    disabled_null_full = (
-        dis_null == rows_meta or n_nulls == 0 or n_all == 0
-    )
-    disabled_range_full = dis_range == rows_meta or k1 is None or n_all == 0
-    enabled_null_bounded = en_null <= adm_null or no_index
-    enabled_range_bounded = en_range <= adm_range or no_index
-    reader_skips_null = (
-        en_null < rows_meta or n_all == 0 or adm_null == rows_meta or no_index
-    )
-    reader_skips_range = (
-        en_range < rows_meta
-        or n_all == 0
-        or k1 is None
-        or adm_range == rows_meta
-        or no_index
-    )
+    no_index = not all(c.indexed for c in index)  # no skip claim (vacuity)
     # data plane: the same two pushed predicates as normal Spark scans
     rt = spark.read.schema(schema).parquet(out)
     nullhit = rt.filter(null_pred)
@@ -1851,16 +1556,34 @@ def scan_parquet_pageindex_reader(spark: SparkSession, sf_dir: str) -> DataFrame
                 dsum(F.col("o_totalprice"), "range_sum_price"),
             )
         )
-        .withColumn("single_rowgroup_ok", F.lit(bool(single_rowgroup_ok)))
-        .withColumn("index_written", F.lit(bool(index_written)))
-        .withColumn("disabled_null_full", F.lit(bool(disabled_null_full)))
-        .withColumn("disabled_range_full", F.lit(bool(disabled_range_full)))
-        .withColumn("enabled_null_bounded", F.lit(bool(enabled_null_bounded)))
-        .withColumn(
-            "enabled_range_bounded", F.lit(bool(enabled_range_bounded))
+        .select(
+            "*",
+            *_flag_cols(
+                single_rowgroup_ok=len(index) <= 1,
+                index_written=not no_index,
+                disabled_null_full=(
+                    dis_null == rows_meta or n_nulls == 0 or n_all == 0
+                ),
+                disabled_range_full=(
+                    dis_range == rows_meta or k1 is None or n_all == 0
+                ),
+                enabled_null_bounded=en_null <= adm_null or no_index,
+                enabled_range_bounded=en_range <= adm_range or no_index,
+                reader_skips_null=(
+                    en_null < rows_meta
+                    or n_all == 0
+                    or adm_null == rows_meta
+                    or no_index
+                ),
+                reader_skips_range=(
+                    en_range < rows_meta
+                    or n_all == 0
+                    or k1 is None
+                    or adm_range == rows_meta
+                    or no_index
+                ),
+            ),
         )
-        .withColumn("reader_skips_null", F.lit(bool(reader_skips_null)))
-        .withColumn("reader_skips_range", F.lit(bool(reader_skips_range)))
     )
 
 

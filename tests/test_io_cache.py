@@ -76,6 +76,61 @@ def test_memoized_plan_still_scans_files(spark):
     assert a.count() == b.count()
 
 
+def _cogroup_offenders(src: str, where: str) -> list:
+    """Functions in ``src`` that cogroup after reading one table twice
+    through io.table without taking at least one side with fresh=True.
+    The table name may be positional or ``name=``; a NON-constant name
+    could be any table, so it counts as a read of every name."""
+    import ast
+
+    offenders = []
+    for fn in (
+        n
+        for n in ast.walk(ast.parse(src, filename=where))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ):
+        if not any(
+            isinstance(n, ast.Attribute) and n.attr == "cogroup"
+            for n in ast.walk(fn)
+        ):
+            continue
+        reads = []  # (constant table name or None, fresh)
+        for n in ast.walk(fn):
+            if not (
+                isinstance(n, ast.Call)
+                and (
+                    (isinstance(n.func, ast.Name) and n.func.id == "table")
+                    or (
+                        isinstance(n.func, ast.Attribute)
+                        and n.func.attr == "table"
+                    )
+                )
+            ):
+                continue
+            kws = {kw.arg: kw.value for kw in n.keywords}
+            name = n.args[2] if len(n.args) >= 3 else kws.get("name")
+            if name is None:
+                continue  # not io.table's (spark, sf_dir, name) shape
+            fresh = n.args[3] if len(n.args) >= 4 else kws.get("fresh")
+            reads.append(
+                (
+                    name.value if isinstance(name, ast.Constant) else None,
+                    isinstance(fresh, ast.Constant) and bool(fresh.value),
+                )
+            )
+        for name in {k for k, _ in reads}:
+            flags = [f for k, f in reads if k in (name, None)]
+            if len(flags) >= 2 and not any(flags):
+                label = (
+                    "a non-constant table name" if name is None else f"'{name}'"
+                )
+                offenders.append(
+                    f"{where}:{fn.name} cogroups but reads {label} "
+                    f"{len(flags)}x without fresh=True"
+                )
+    return offenders
+
+
 def test_cogroup_sites_take_a_fresh_side():
     """ADVICE r14 (medium): the plan memo hands every table() caller ONE
     shared DataFrame object, so a self-cogroup whose two sides come from
@@ -85,58 +140,47 @@ def test_cogroup_sites_take_a_fresh_side():
     for cogroup binding).  This lint fails ANY package function that
     cogroups after reading the same table twice without taking at least
     one side with fresh=True — so the safety is no longer a single
-    hand-patched site."""
-    import ast
+    hand-patched site.  ADVICE r15: it also catches ``name=`` keyword
+    calls and non-constant table names, checked on synthetic sources."""
     import pathlib
 
     pkg = (
         pathlib.Path(__file__).resolve().parents[1] / "datafusion_test_spark"
     )
-    offenders = []
-    for py in pkg.rglob("*.py"):
-        tree = ast.parse(py.read_text(), filename=str(py))
-        for fn in (
-            n
-            for n in ast.walk(tree)
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-        ):
-            if not any(
-                isinstance(n, ast.Attribute) and n.attr == "cogroup"
-                for n in ast.walk(fn)
-            ):
-                continue
-            reads: dict = {}
-            for n in ast.walk(fn):
-                is_table_call = isinstance(n, ast.Call) and (
-                    (isinstance(n.func, ast.Name) and n.func.id == "table")
-                    or (
-                        isinstance(n.func, ast.Attribute)
-                        and n.func.attr == "table"
-                    )
-                )
-                if (
-                    is_table_call
-                    and len(n.args) >= 3
-                    and isinstance(n.args[2], ast.Constant)
-                ):
-                    fresh = any(
-                        kw.arg == "fresh"
-                        and isinstance(kw.value, ast.Constant)
-                        and kw.value.value
-                        for kw in n.keywords
-                    ) or (
-                        len(n.args) >= 4
-                        and isinstance(n.args[3], ast.Constant)
-                        and n.args[3].value
-                    )
-                    reads.setdefault(n.args[2].value, []).append(fresh)
-            for name, flags in reads.items():
-                if len(flags) >= 2 and not any(flags):
-                    offenders.append(
-                        f"{py.name}:{fn.name} cogroups but reads "
-                        f"'{name}' {len(flags)}x without fresh=True"
-                    )
+    offenders = [
+        o
+        for py in pkg.rglob("*.py")
+        for o in _cogroup_offenders(py.read_text(), py.name)
+    ]
     assert not offenders, offenders
+
+    caught = _cogroup_offenders(
+        """
+def by_keyword(spark, d):
+    a = table(spark, d, name="events")
+    b = io.table(spark, d, name="events")
+    return a.groupBy("k").cogroup(b.groupBy("k"))
+
+def by_variable(spark, d, t):
+    a = table(spark, d, t)
+    b = table(spark, d, "events")
+    return a.groupBy("k").cogroup(b.groupBy("k"))
+
+def both_variable(spark, d, t, u):
+    a = table(spark, d, name=t)
+    b = table(spark, d, u)
+    return a.groupBy("k").cogroup(b.groupBy("k"))
+
+def fresh_side(spark, d, t):
+    a = table(spark, d, name=t)
+    b = table(spark, d, "events", fresh=True)
+    return a.groupBy("k").cogroup(b.groupBy("k"))
+""",
+        "synthetic.py",
+    )
+    assert sorted({o.split(":")[1].split()[0] for o in caught}) == [
+        "both_variable", "by_keyword", "by_variable"
+    ], caught
 
 
 def test_stale_session_entries_evicted(spark):
@@ -164,6 +208,42 @@ def test_tune_repins_after_external_conf_mutation(spark):
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         tune(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        for k, v in RUNTIME_CONFS.items():
+            assert spark.conf.get(k, v) == v
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_tune_repins_when_the_sentinel_read_raises(spark, monkeypatch):
+    """ADVICE r15: a sentinel read that RAISES must fall through to the
+    full re-pin — returning early there let one transient conf-API error
+    switch re-pinning off for good.  The normal memoized path still costs
+    exactly one sentinel read."""
+    from datafusion_test_spark.session import RUNTIME_CONFS, tune
+
+    tune(spark)
+    conf = spark.conf
+    real_get = conf.get
+    reads = []
+
+    def counting_get(*args):
+        reads.append(args)
+        return real_get(*args)
+
+    monkeypatch.setattr(conf, "get", counting_get)
+    tune(spark)
+    assert len(reads) == 1, reads
+
+    def get_raising_once(*args):
+        monkeypatch.setattr(conf, "get", real_get)
+        raise RuntimeError("transient conf-API error")
+
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    monkeypatch.setattr(conf, "get", get_raising_once)
+    try:
+        tune(spark)
+        assert conf.get is real_get, "the sentinel read never ran"
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
         for k, v in RUNTIME_CONFS.items():
             assert spark.conf.get(k, v) == v

@@ -271,6 +271,9 @@ def test_bench_summary_line_is_compact_and_self_contained():
         "layout_queries": {f"layout_{i}": 1.0 for i in range(6)},
         "layout_wall_sec": 6.0,
         "sf": 0.1,
+        # every headline query failing its warm-up: the full record keeps
+        # each name and exception type, the summary only their count
+        "warmup_failures": {name: "Py4JJavaError" for name in queries},
         "machine": {
             "cpus": 32,
             "spark_cpus": "32",
@@ -291,6 +294,7 @@ def test_bench_summary_line_is_compact_and_self_contained():
     assert summary["summary"] is True
     assert summary["value"] == record["value"]
     assert summary["n_queries"] == 220
+    assert summary["warmup_failures"] == 220
     assert summary["layout_wall_sec"] == 6.0
     assert summary["machine"] == record["machine"]
     assert summary["paired_baseline"]["headline_wall_sec"] == 132.467
@@ -298,6 +302,7 @@ def test_bench_summary_line_is_compact_and_self_contained():
     assert max(queries, key=queries.get) in summary["top10_slowest"]
     # the giant per-query maps must NOT be in the summary line
     assert "queries" not in summary and "layout_queries" not in summary
+    assert "Py4JJavaError" not in line
     # print-order contract: the summary closes stdout (the driver's
     # 2000-char tail capture must land on it), full record printed BEFORE
     src = (ROOT / "bench.py").read_text()

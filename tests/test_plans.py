@@ -4,6 +4,8 @@ explicitly enables (pushdown src/main.rs:126, pruning :131, partitioning
 
 from __future__ import annotations
 
+from itertools import groupby
+
 from pyspark.sql import functions as F
 
 from datafusion_test_spark.io import table
@@ -11,6 +13,33 @@ from datafusion_test_spark.io import table
 from conftest import SF_SMALL
 from datafusion_test_spark.operators import joins, relational, sorting, subqueries
 from datafusion_test_spark.plans import introspect
+
+
+def _row_group_blooms(chunks) -> list:
+    """Each row group's bloom filter (None where it carries none) from
+    connectors._column_chunks triples."""
+    return [
+        reader.getBloomFilterDataReader(block).readBloomFilter(chunk)
+        for reader, block, chunk in chunks
+    ]
+
+
+def _chunk_counts(index):
+    """(row groups, indexed chunks, pages, chunks with fewer pages than
+    the page-row cap allows, UNORDERED chunks) of a connectors._page_index
+    walk."""
+    from datafusion_test_spark.sources.connectors import _PAGE_ROW_LIMIT
+
+    return (
+        len(index),
+        sum(c.indexed for c in index),
+        sum(len(c.pages) for c in index),
+        sum(
+            c.indexed and len(c.pages) * _PAGE_ROW_LIMIT < c.rows
+            for c in index
+        ),
+        sum(c.order == "UNORDERED" for c in index),
+    )
 
 
 def _plan(df) -> str:
@@ -523,15 +552,15 @@ def test_parquet_bloom_lookup_pushed_and_probe_nonvacuous(spark, sf_dir):
     lo = o.agg(F.min("o_orderkey")).first()[0]
     files = [f for f in sorted(os.listdir(out)) if f.endswith(".parquet")]
     assert files
-    rg = bloomed = cells = excl = 0
-    hit = [False]
-    for f in files:
-        t, b, c, e, flags = connectors._bloom_probe_file(
-            spark, os.path.join(out, f), "key",
-            [f"k{lo}"], [f"miss{i}" for i in range(16)],
-        )
-        rg += t; bloomed += b; cells += c; excl += e
-        hit = [got or new for got, new in zip(hit, flags)]
+    blooms = _row_group_blooms(connectors._column_chunks(spark, out, "key"))
+    misses = [f"miss{i}" for i in range(16)]
+    rg, bloomed = len(blooms), sum(bf is not None for bf in blooms)
+    cells = len(misses) * bloomed
+    excl = sum(
+        not connectors._bloom_admits(spark, bf, v)
+        for v in misses for bf in blooms if bf is not None
+    )
+    hit = [any(connectors._bloom_admits(spark, bf, f"k{lo}") for bf in blooms)]
     assert rg > 0 and bloomed == rg, (rg, bloomed)
     assert all(hit), "present key excluded — bloom false negative?"
     assert cells > 0 and excl * 10 >= cells * 9, (excl, cells)
@@ -570,14 +599,11 @@ def test_parquet_pageindex_pushed_and_probe_nonvacuous(spark, sf_dir):
     )
     row = o.agg(F.min("o_orderkey").alias("lo")).first()
     lo = row["lo"]
-    rg = idx = pages = gbad = uo = pp = bp = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, i, pg, gb, u, p, b = connectors._pageindex_probe_file(
-            spark, os.path.join(out, f), "o_orderkey", lo, lo - 1
-        )
-        rg += t; idx += i; pages += pg; gbad += gb; uo += u; pp += p; bp += b
+    index = list(connectors._page_index(spark, out, "o_orderkey", "INT64"))
+    rg, idx, pages, gbad, uo = _chunk_counts(index)
+    flat = [p for c in index for p in c.pages]
+    pp = connectors._pages_admitting(flat, lo)
+    bp = connectors._pages_admitting(flat, lo - 1)
     assert rg > 0 and idx == rg, (rg, idx)
     assert pages > rg, f"page tier not finer than row groups: {pages} pages / {rg} groups"
     assert gbad == 0 and uo == 0, (gbad, uo)
@@ -599,35 +625,12 @@ def test_parquet_pageindex_descending_layout_is_ordered_not_unordered(spark, sf_
     from datafusion_test_spark._util import scratch_dir
     from datafusion_test_spark.sources import connectors
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
     def boundary_orders(out):
-        orders = []
-        for f in sorted(os.listdir(out)):
-            if not f.endswith(".parquet"):
-                continue
-            hpath = jvm.org.apache.hadoop.fs.Path(os.path.join(out, f))
-            infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                hpath, conf
-            )
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-            try:
-                blocks = reader.getRowGroups()
-                for i in range(blocks.size()):
-                    cols = blocks.get(i).getColumns()
-                    for j in range(cols.size()):
-                        cc = cols.get(j)
-                        if cc.getPath().toDotString() != "o_orderkey":
-                            continue
-                        ci = reader.readColumnIndex(cc)
-                        oi = reader.readOffsetIndex(cc)
-                        if ci is not None and oi.getPageCount() > 1:
-                            orders.append(str(ci.getBoundaryOrder()))
-                        break
-            finally:
-                reader.close()
-        return orders
+        return [
+            c.order
+            for c in connectors._page_index(spark, out, "o_orderkey", "INT64")
+            if c.indexed and len(c.pages) > 1
+        ]
 
     o = table(spark, sf_dir, "orders").select("o_orderkey")
 
@@ -691,14 +694,22 @@ def test_parquet_bloom_hit_ok_survives_multi_file_layout(spark, sf_dir):
     hit_keys = [f"k{row['lo']}", f"k{row['hi']}"]
     files = [f for f in sorted(os.listdir(out)) if f.endswith(".parquet")]
     assert len(files) > 1, "multi-file layout required for this pin"
-    found = [False, False]
-    per_file_flags = []
-    for f in files:
-        _, _, _, _, flags = connectors._bloom_probe_file(
-            spark, os.path.join(out, f), "key", hit_keys, []
+    # one reader per file: group the row groups by it
+    per_file_flags = [
+        [
+            any(connectors._bloom_admits(spark, bf, k) for bf in blooms)
+            for k in hit_keys
+        ]
+        for blooms in (
+            _row_group_blooms(group)
+            for _, group in groupby(
+                connectors._column_chunks(spark, out, "key"),
+                key=lambda t: t[0],
+            )
         )
-        per_file_flags.append(flags)
-        found = [got or new for got, new in zip(found, flags)]
+    ]
+    assert len(per_file_flags) == len(files), per_file_flags
+    found = [any(flags[i] for flags in per_file_flags) for i in range(2)]
     assert all(found), f"cross-file OR lost a present key: {per_file_flags}"
     assert any(
         not flag for flags in per_file_flags for flag in flags
@@ -749,15 +760,17 @@ def test_parquet_pageindex_string_truncation_onesided(spark, sf_dir):
     agg = o.agg(F.min("key").alias("lo"), F.max("key").alias("hi")).first()
     lo, hi = agg["lo"].encode(), agg["hi"].encode()
     fp = hi + b"z"  # > every key: an EXACT index admits this in 0 pages
-    rg = idx = pages = gbad = uo = pp = fpp = bp = ob = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, i, pg, gb, u, p, fq, b, o_ = connectors._pageindex_probe_file_str(
-            spark, os.path.join(out, f), "key", lo, fp, b""
-        )
-        rg += t; idx += i; pages += pg; gbad += gb; uo += u
-        pp += p; fpp += fq; bp += b; ob += o_
+    index = list(connectors._page_index(spark, out, "key", "BINARY"))
+    rg, idx, pages, gbad, uo = _chunk_counts(index)
+    flat = [p for c in index for p in c.pages]
+    pp = connectors._pages_admitting(flat, lo)
+    fpp = connectors._pages_admitting(flat, fp)
+    bp = connectors._pages_admitting(flat, b"")
+    ob = sum(
+        max(len(p.lo), len(p.hi)) > connectors._PAGE_TRUNC_LEN
+        for p in flat
+        if not p.all_null
+    )
     assert rg > 0 and idx == rg, (rg, idx)
     assert pages > rg, f"page tier not finer than row groups: {pages}/{rg}"
     assert gbad == 0 and uo == 0, (gbad, uo)
@@ -869,17 +882,20 @@ def test_parquet_pageindex_nulls_axis(spark, sf_dir):
         .parquet(out)
     )
     lo = 1  # min non-null id (0 % 3 == 0 -> NULL; 1 survives)
-    rg = idx = pages = gbad = uo = pp = bp = an = sn = fm = npx = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        (t, i, pg, gb, u, p, b, a, s, fmm, nx) = (
-            connectors._pageindex_probe_file_nulls(
-                spark, os.path.join(out, f), "key", lo, lo - 1
-            )
-        )
-        rg += t; idx += i; pages += pg; gbad += gb; uo += u
-        pp += p; bp += b; an += a; sn += s; fm += fmm; npx += nx
+    index = list(connectors._page_index(spark, out, "key", "INT64"))
+    rg, idx, pages, gbad, uo = _chunk_counts(index)
+    flat = [p for c in index for p in c.pages]  # one file: file order
+    pp = connectors._pages_admitting(flat, lo)
+    bp = connectors._pages_admitting(flat, lo - 1)
+    an = sum(p.all_null for p in flat)
+    sn = sum(p.null_count for p in flat)
+    fm = sum(
+        (not 0 <= p.null_count <= p.rows)
+        + (p.all_null != (p.null_count == p.rows))
+        for p in flat
+    )
+    first_free = next(i for i, p in enumerate(flat) if p.null_count == 0)
+    npx = sum(p.null_count > 0 for p in flat[first_free:])
     assert rg > 0 and idx == rg, (rg, idx)
     assert gbad == 0 and uo == 0, (gbad, uo)
     assert sn == 5000, f"per-page null counts sum {sn} != 5000"
@@ -948,15 +964,10 @@ def test_pageindex_probe_type_asserts(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(out)
     )
-    f = next(
-        os.path.join(out, x)
-        for x in sorted(os.listdir(out))
-        if x.endswith(".parquet")
-    )
     with pytest.raises(ValueError, match="INT64 bounds only"):
-        connectors._pageindex_probe_file(spark, f, "key", 0, None)
+        list(connectors._page_index(spark, out, "key", "INT64"))
     with pytest.raises(ValueError, match="BINARY bounds only"):
-        connectors._pageindex_probe_file_str(spark, f, "o_orderkey", b"", None, None)
+        list(connectors._page_index(spark, out, "o_orderkey", "BINARY"))
 
 
 def test_parquet_pageindex_string_total_truncation_stays_onesided(spark, sf_dir):
@@ -991,14 +1002,12 @@ def test_parquet_pageindex_string_total_truncation_stays_onesided(spark, sf_dir)
     )
     agg = o.agg(F.min("key").alias("lo"), F.max("key").alias("hi")).first()
     lo, fp = agg["lo"].encode(), agg["hi"].encode() + b"z"
-    rg = idx = pages = pp = fpp = bp = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, i, pg, _gb, _u, p, fq, b, _o = connectors._pageindex_probe_file_str(
-            spark, os.path.join(out, f), "key", lo, fp, b""
-        )
-        rg += t; idx += i; pages += pg; pp += p; fpp += fq; bp += b
+    index = list(connectors._page_index(spark, out, "key", "BINARY"))
+    rg, idx, pages, _gb, _u = _chunk_counts(index)
+    flat = [p for c in index for p in c.pages]
+    pp = connectors._pages_admitting(flat, lo)
+    fpp = connectors._pages_admitting(flat, fp)
+    bp = connectors._pages_admitting(flat, b"")
     assert rg > 0 and idx == rg and pages > 1, (rg, idx, pages)
     # pruning is GONE: single-byte bounds admit the min key (and the
     # absent above-max key) in EVERY page — the false-positive side at
@@ -1073,13 +1082,15 @@ def test_parquet_pageindex_reader_skips_strictly(spark, tmp_path):
     # non-null span 1..30000 minus multiples of 3 -> lo=1, hi=29999,
     # k1 = 1 + 14999, k2 = k1 + 299 (the entry's derivation, restated)
     k1, k2 = 1 + 29998 // 2, 1 + 29998 // 2 + max(29998 // 100, 1)
-    f = next(
-        os.path.join(out, x)
-        for x in sorted(os.listdir(out))
-        if x.endswith(".parquet")
-    )
-    (rg, idx, pages, rows_meta, adm_range, adm_null) = (
-        connectors._pageindex_admitted_rows(spark, f, "key", k1, k2)
+    index = list(connectors._page_index(spark, out, "key", "INT64"))
+    rg, idx, pages, _gb, _u = _chunk_counts(index)
+    flat = [p for c in index for p in c.pages]
+    rows_meta = sum(c.rows for c in index)
+    # the admitted-row budgets: IS NULL admits null-bearing pages; the
+    # range admits non-null pages whose exact bounds intersect [k1, k2]
+    adm_null = sum(p.rows for p in flat if p.null_count > 0)
+    adm_range = sum(
+        p.rows for p in flat if not p.all_null and p.lo <= k2 and k1 <= p.hi
     )
     assert rg == 1 and idx == 1 and rows_meta == 30000
     assert pages >= 30, f"{pages} pages on a 30k-row 1000-row-page layout"
